@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,21 +39,19 @@ object Interpolate {
     val after  = base.rowsBetween(0, Window.unboundedFollowing)
 
     val withPos = df.withColumn("__pos", row_number().over(base))
-    val out = valueCols.foldLeft(withPos) { (acc, c) =>
+    val filled = valueCols.map { c =>
       val v = col(c).cast("double")
       val prevVal = last(v, ignoreNulls = true).over(before)
       val prevPos = last(when(v.isNotNull, col("__pos")), ignoreNulls = true).over(before)
       val nextVal = first(v, ignoreNulls = true).over(after)
       val nextPos = first(when(v.isNotNull, col("__pos")), ignoreNulls = true).over(after)
-      acc.withColumn(c,
-        when(v.isNotNull, v)
-          .when(prevVal.isNotNull && nextVal.isNotNull,
-            prevVal + (nextVal - prevVal) * (col("__pos") - prevPos) / (nextPos - prevPos))
-          .when(prevVal.isNotNull, prevVal) // trailing nulls: ffill
-          .otherwise(lit(null))             // leading nulls stay null
-      )
+      c -> when(v.isNotNull, v)
+        .when(prevVal.isNotNull && nextVal.isNotNull,
+          prevVal + (nextVal - prevVal) * (col("__pos") - prevPos) / (nextPos - prevPos))
+        .when(prevVal.isNotNull, prevVal) // trailing nulls: ffill
+        .otherwise(lit(null))             // leading nulls stay null
     }
-    out.drop("__pos")
+    withPos.withColumns(ListMap(filled: _*)).drop("__pos")
   }
 
   /** Reference quirk (`ops/transform.py:280-282`): before interpolating, the
@@ -60,11 +60,11 @@ object Interpolate {
   def zeroAnchorFirstRow(df: DataFrame, partitionCols: Seq[String],
                          orderCols: Seq[String], valueCols: Seq[String]): DataFrame = {
     val w = Window.partitionBy(partitionCols.map(col): _*).orderBy(orderCols.map(col): _*)
-    val withRn = df.withColumn("__rn0", row_number().over(w))
-    val out = valueCols.foldLeft(withRn) { (acc, c) =>
-      acc.withColumn(c,
-        when(col("__rn0") === 1 && col(c).isNull, lit(0.0)).otherwise(col(c).cast("double")))
+    val anchored = valueCols.map { c =>
+      c -> when(col("__rn0") === 1 && col(c).isNull, lit(0.0)).otherwise(col(c).cast("double"))
     }
-    out.drop("__rn0")
+    df.withColumn("__rn0", row_number().over(w))
+      .withColumns(ListMap(anchored: _*))
+      .drop("__rn0")
   }
 }

@@ -78,25 +78,28 @@ object HimalayanPipeline {
     * default), zero-anchor each country's first null, per-country linear
     * interpolation by row position, per-year qcut(3, duplicates="drop")
     * bucket columns, surrogate key.
+    *
+    * Each step handles all five indicators in one projection, and the
+    * buckets come from the multi-column [[QuantileBucket.qcut3]]: one
+    * per-year aggregate and one join for all five, so the analyzed plan
+    * reads `wbLong` twice. Do not fold the single-column qcut over the
+    * indicators: each step would double the lineage (32 leaves, ~1.7 k
+    * nodes), and every later call on the result (the cache lookup, the
+    * fact's fuzzy join) would re-analyze that tree.
     */
   def dimCountryIndicator(wbLong: DataFrame): DataFrame = {
     val wide = PivotOps.meanPivot(wbLong,
         Seq("COUNTRYCODE", "COUNTRYNAME", "YEAR"), "INDICATORCODE",
         indicatorCodes, "VALUE")
-      .withColumnRenamed("COUNTRYCODE", "CountryCode")
-      .withColumnRenamed("COUNTRYNAME", "CountryName")
-      .withColumnRenamed("YEAR", "Year")
-    val renamed = indicatorNames.foldLeft(wide) { case (df, (code, name)) =>
-      df.withColumnRenamed(code, name)
-    }
+    val renamed = wide.withColumnsRenamed(indicatorNames ++
+      Map("COUNTRYCODE" -> "CountryCode", "COUNTRYNAME" -> "CountryName", "YEAR" -> "Year"))
     val valueCols = indicatorNames.values.toSeq
     val part = Seq("CountryCode")
     val ord = Seq("CountryName", "Year")
     val anchored = Interpolate.zeroAnchorFirstRow(renamed, part, ord, valueCols)
     val filled = Interpolate.linear(anchored, part, ord, valueCols)
-    val bucketed = valueCols.foldLeft(filled) { (df, c) =>
-      QuantileBucket.qcut3(df, Seq("Year"), c, s"${c}Bucket")
-    }
+    val bucketed = QuantileBucket.qcut3(filled, Seq("Year"),
+      valueCols.map(c => c -> s"${c}Bucket"))
     SurrogateKey.dense(bucketed, Seq(col("CountryCode"), col("Year")))
       .select((Seq(col("Id"), col("CountryCode"), col("CountryName"), col("Year")) ++
         valueCols.map(col) ++ valueCols.map(c => col(s"${c}Bucket"))): _*)

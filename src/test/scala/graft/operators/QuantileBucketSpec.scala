@@ -45,4 +45,41 @@ class QuantileBucketSpec extends SparkSpec {
     val got = buckets(Seq(Some(1.0), Some(2.0), Some(3.0), None))
     assert(got(None).isEmpty)
   }
+
+  test("multi-column form == folding the single-column form, column by column") {
+    // per group: v1 distinct / constant / all-null, v2 ties that collapse
+    // edges, v3 nulls inside a group; plus an all-null group and a null key
+    val rows = Seq[(Option[String], Option[Double], Option[Double], Option[Double])](
+      (Some("a"), Some(1.0), Some(5.0), Some(1.0)),
+      (Some("a"), Some(2.0), Some(5.0), None),
+      (Some("a"), Some(3.0), Some(5.0), Some(3.0)),
+      (Some("a"), Some(4.0), Some(5.0), None),
+      (Some("a"), Some(5.0), Some(5.0), Some(2.0)),
+      (Some("a"), Some(6.0), Some(9.0), Some(8.0)),
+      (Some("b"), Some(7.0), None, Some(1.0)),
+      (Some("b"), Some(7.0), None, Some(1.0)),
+      (Some("b"), Some(7.0), None, Some(5.0)),
+      (Some("b"), Some(7.0), None, Some(9.0)),
+      (Some("c"), None, None, None),
+      (Some("c"), None, None, None),
+      (None, Some(1.0), Some(2.0), None),
+      (None, Some(2.0), Some(2.0), Some(4.0)))
+    val df = rows.toDF("g", "v1", "v2", "v3")
+    val cols = Seq("v1" -> "b1", "v2" -> "b2", "v3" -> "b3")
+
+    val multi = QuantileBucket.qcut3(df, Seq("g"), cols)
+    val folded = cols.foldLeft(df) { case (acc, (v, b)) =>
+      QuantileBucket.qcut3(acc, Seq("g"), v, b)
+    }
+    assert(multi.schema == folded.schema)
+    assert(multi.columns.toSeq == Seq("g", "v1", "v2", "v3", "b1", "b2", "b3"))
+    assert(multi.exceptAll(folded).isEmpty)
+    assert(folded.exceptAll(multi).isEmpty)
+    assert(multi.count() == rows.size)
+    // the cases above are all exercised, not vacuous
+    val labels = multi.select("b1", "b2", "b3").as[(Option[String], Option[String],
+      Option[String])].collect()
+    assert(labels.flatMap(r => Seq(r._1, r._2, r._3)).flatten.toSet ==
+      Set("Low", "Medium", "High"))
+  }
 }

@@ -84,6 +84,14 @@ class HimalayanPipelineSpec extends SparkSpec {
     assert(got(("BBB", 2000))._1 == 6)
   }
 
+  test("DIM_CountryIndicator's plan reads wbLong twice, not 2^n times") {
+    // one aggregate + one join for all five indicators; a per-column qcut
+    // fold doubles the lineage per indicator (2^5 = 32 leaves)
+    val leaves = HimalayanPipeline.dimCountryIndicator(wbLong)
+      .queryExecution.analyzed.collectLeaves()
+    assert(leaves.size <= 2, s"${leaves.size} leaves")
+  }
+
   test("FACT_MemberExpedition: joins, fuzzy citizenship, bins, flags") {
     val tables = HimalayanPipeline.build(members, expeditions, peaks, wbLong)
     val fact = tables("FACT_MemberExpedition")
