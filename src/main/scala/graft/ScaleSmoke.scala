@@ -271,8 +271,10 @@ object ScaleSmoke {
     def run(df: DataFrame): Long = {
       val weighted = df.select(col("doc_id"),
         graft.functions.TextFunctions.tokenCount(col("text")).cast("long").as("w"))
-      graft.operators.Packing.withSequences(
-        weighted, Seq(col("doc_id")), "w", 2048L)(_.count())
+      graft.operators.Pins.scoped {
+        graft.operators.Packing.sequences(
+          weighted, Seq(col("doc_id")), "w", 2048L).count()
+      }
     }
     run(small) // warm-up (codegen, shuffles)
     val (rows1, t1) = time(run(small))
@@ -754,10 +756,12 @@ object ScaleSmoke {
           .as("domain"),
         (lit(1L) + pmod(col("id") * 2654435761L, lit(50))).as("w"))
     def run(n: Long): Long =
-      // the leak-free bracket form (round 16): the internal persist is
-      // released per call, no clearCache hammer
-      graft.operators.Sampling.withWeightCappedPerStratum(
-        corpus(n), Seq("domain"), Seq("id"), "w", budget = 200000L)(_.count())
+      // scoped: the two-pass pin is released per call, no clearCache
+      // hammer
+      graft.operators.Pins.scoped {
+        graft.operators.Sampling.weightCappedPerStratum(
+          corpus(n), Seq("domain"), Seq("id"), "w", budget = 200000L).count()
+      }
     try {
       run(baseRows.toLong) // warm-up (codegen, shuffles)
       val (r1, t1a) = time(run(baseRows.toLong))

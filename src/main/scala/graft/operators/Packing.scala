@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Sequence packing for LLM pretraining pipelines: place every document at
@@ -10,82 +9,27 @@ import org.apache.spark.sql.functions._
   * the "concatenate and chunk" step every autoregressive-pretraining data
   * pipeline runs between curation and the trainer.
   *
-  * Scale shape (same two-pass discipline as
-  * [[SurrogateKey.scalable]] — a naive global-window cumulative sum would
-  * serialize 100 TB through ONE partition):
-  *   1. range-sort by the order key; `monotonically_increasing_id()` pins
-  *      (partition id, local row number) as column arithmetic;
-  *   2. per-partition WEIGHT SUMS (one row per partition) become prefix
-  *      offsets via a window over #partitions rows, broadcast back;
-  *   3. the within-partition running sum is a window PARTITIONED BY the
-  *      range-sort partition id — parallel across partitions (its hash
-  *      exchange moves each range partition as one group, never through a
-  *      single task).
-  * Two data shuffles total (the range sort, the pid-keyed window), both
-  * fully parallel. Determinism requires the sort key to be TOTAL (tie-break
-  * like any two-pass id assignment); weights must be non-negative.
+  * Scale shape: the stream offsets are [[TwoPass.prefix]]'s global
+  * exclusive running sum — a naive global-window cumulative sum would
+  * serialize 100 TB through ONE partition. Two data shuffles total (the
+  * range sort, the pid-keyed window), both fully parallel. Determinism
+  * requires the sort key to be TOTAL (tie-break like any two-pass id
+  * assignment); weights must be non-negative.
   *
-  * CACHE LIFETIME: the internal persist pins the partition-dependent
-  * `__mid` values across the two consumers (counts + join) — same
-  * correctness argument as [[SurrogateKey.scalable]], same release
-  * contract: `spark.catalog.clearCache()` after the final action, or the
-  * [[withStreamPositions]] bracket.
+  * CACHE LIFETIME: [[TwoPass]] pins its range-sorted relation through
+  * [[Pins]]; release it with `Pins.scoped` around the final action.
   */
 object Packing {
 
-  /** Core two-pass positions, returning BOTH the positioned frame and the
-    * pinned internal relation. The handle is the caller's to release (after
-    * the frame's final action) — returned explicitly so concurrent callers
-    * can never see each other's persist (a shared mutable slot here would
-    * let one call unpersist another's pinned relation mid-use).
-    */
-  private def positionsAndHandle(df: DataFrame, order: Seq[Column],
-                                 weightCol: String,
-                                 startCol: String): (DataFrame, DataFrame) = {
-    // TwoPass.tagged: per-call literal so concurrent brackets over
-    // structurally identical inputs never share (and cross-unpersist)
-    // one cache entry — see the TwoPass.callTag scaladoc
-    val sorted = TwoPass.tagged(df.orderBy(order: _*)
-      .withColumn("__mid", monotonically_increasing_id()))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pid = shiftright(col("__mid"), 33)
-    val partSums = sorted.groupBy(pid.as("__pid"))
-      .agg(sum(col(weightCol)).as("__w"))
-    val offsets = partSums.select(col("__pid"),
-      (sum(col("__w")).over(Window.orderBy("__pid")) - col("__w")).as("__poff"))
-    // running sum of STRICTLY EARLIER rows within the range partition —
-    // parallel windows, one per partition id
-    val wLocal = Window.partitionBy(pid).orderBy(col("__mid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val out = sorted
-      .join(broadcast(offsets), pid === col("__pid"))
-      .withColumn(startCol,
-        col("__poff") + coalesce(sum(col(weightCol)).over(wLocal), lit(0L)))
-      .drop("__mid", "__pid", "__poff", "__call_tag")
-    (out, sorted)
-  }
-
   /** Adds `startCol`: the row's global starting offset in the concatenated
     * weight stream (0-based; the running sum of `weightCol` over all
-    * earlier rows in `order`). The internal persist stays pinned to the
-    * returned frame; release it with `spark.catalog.clearCache()` after the
-    * final action, or use the leak-free [[withStreamPositions]] bracket.
+    * earlier rows in `order`).
     */
   def streamPositions(df: DataFrame, order: Seq[Column], weightCol: String,
                       startCol: String = "stream_start"): DataFrame =
-    positionsAndHandle(df, order, weightCol, startCol)._1
-
-  /** Resource-bracket form of [[streamPositions]] (releases the internal
-    * persist once `use` has executed its actions). Safe under concurrency:
-    * each bracket owns its own handle.
-    */
-  def withStreamPositions[T](df: DataFrame, order: Seq[Column], weightCol: String,
-                             startCol: String = "stream_start")
-                            (use: DataFrame => T): T = {
-    val (out, handle) = positionsAndHandle(df, order, weightCol, startCol)
-    try use(out)
-    finally handle.unpersist(blocking = false)
-  }
+    TwoPass.prefix(df, Nil, order, col(weightCol), sum,
+      (o, l) => coalesce(o, lit(0L)) + coalesce(l, lit(0L)),
+      inclusive = false, startCol)
 
   /** Concatenate-and-chunk: [[streamPositions]] plus the fixed-length
     * training-sequence mapping — for sequence length `seqLen`, each row
@@ -98,13 +42,8 @@ object Packing {
   def chunk(df: DataFrame, order: Seq[Column], weightCol: String,
             seqLen: Long): DataFrame = {
     require(seqLen > 0, s"seqLen must be positive, got $seqLen")
-    chunkFrom(streamPositions(df, order, weightCol), weightCol, seqLen)
-  }
-
-  private def chunkFrom(positioned: DataFrame, weightCol: String,
-                        seqLen: Long): DataFrame = {
     val w = col(weightCol)
-    positioned
+    streamPositions(df, order, weightCol)
       .withColumn("seq_first", expr(s"stream_start div ${seqLen}L"))
       .withColumn("seq_last", expr(
         s"(stream_start + greatest(`$weightCol`, 1L) - 1L) div ${seqLen}L"))
@@ -134,30 +73,11 @@ object Packing {
     */
   def sequences(df: DataFrame, order: Seq[Column], weightCol: String,
                 seqLen: Long): DataFrame = {
-    require(seqLen > 0, s"seqLen must be positive, got $seqLen")
-    sequencesFrom(chunk(df, order, weightCol, seqLen), weightCol, seqLen)
-  }
-
-  /** Bracket form of [[sequences]]: releases the internal persist after
-    * `use` has executed its actions.
-    */
-  def withSequences[T](df: DataFrame, order: Seq[Column], weightCol: String,
-                       seqLen: Long)(use: DataFrame => T): T = {
-    val (positioned, handle) =
-      positionsAndHandle(df, order, weightCol, "stream_start")
-    val out = sequencesFrom(chunkFrom(positioned, weightCol, seqLen),
-      weightCol, seqLen)
-    try use(out)
-    finally handle.unpersist(blocking = false)
-  }
-
-  private def sequencesFrom(chunked: DataFrame, weightCol: String,
-                            seqLen: Long): DataFrame = {
     val w = col(weightCol)
     val seqStart = col("seq_id") * seqLen
     val sliceStart = greatest(col("stream_start"), seqStart)
     val sliceEnd = least(col("stream_start") + w, seqStart + seqLen)
-    chunked.where(w > 0)
+    chunk(df, order, weightCol, seqLen).where(w > 0)
       .withColumn("seq_id", explode(sequence(col("seq_first"), col("seq_last"))))
       .withColumn("offset_in_seq", sliceStart - seqStart)
       .withColumn("offset_in_doc", sliceStart - col("stream_start"))

@@ -9,13 +9,12 @@ import org.apache.spark.sql.functions._
   * whose single-window execution funnels the ENTIRE relation through one
   * task. A thin wrapper over [[TwoPass.prefix]] (no strata, exclusive
   * frame, max/greatest as aggregate/merge) — the same skeleton behind
-  * [[SurrogateKey.scalable]], [[Packing.streamPositions]] and
-  * [[Sampling]]'s per-stratum cumsum.
+  * [[Packing.streamPositions]] and [[Sampling]]'s per-stratum cumsum.
   *
   * Used by s05's watermark-lateness model: "max event-time seen strictly
   * before me in arrival order" is a data-sized prefix max that must never
-  * serialize. CACHE LIFETIME: [[TwoPass]]'s internal persist — release
-  * with `spark.catalog.clearCache()` after the final action.
+  * serialize. CACHE LIFETIME: [[TwoPass]] pins through [[Pins]]; release
+  * with `Pins.scoped` around the final action.
   */
 object PrefixAgg {
 

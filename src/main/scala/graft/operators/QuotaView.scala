@@ -61,7 +61,7 @@ import graft.sources.AdditiveStats
   * lives in exactly one batch and ids are unique).
   *
   * Scale shape: per batch, the within-batch running sum rides
-  * [[Sampling.stratumRunningSumAndHandle]]'s SIZE-GATED core (round 16,
+  * [[Sampling.stratumRunningSum]]'s SIZE-GATED core (round 16,
   * closing the r15 verdict's What's-wrong #3): a trigger-bounded
   * micro-batch takes the one-window form (one batch-sized shuffle), and
   * a batch at or above [[BatchTwoPassMinRowsKey]] rows takes the same
@@ -70,7 +70,7 @@ import graft.sources.AdditiveStats
   * task. Same total order either way, so the admitted set is identical
   * (the SamplingSpec law + the QuotaViewSpec gate-equivalence test).
   * The gate costs one `count()` of the already-materialized micro-batch;
-  * the internal two-pass persist is released before returning (the
+  * the batch's pins ([[Pins.scoped]]) are released before returning (the
   * returned admitted relation is served from the just-written store
   * fragment, so nothing re-evaluates the unpinned plan). On top of that:
   * one aggregate scan of the store's per-stratum sums (a mega-store's
@@ -160,22 +160,21 @@ object QuotaView {
     // size-gated within-batch rank (see the scaladoc's scale-shape note):
     // the count gates a materialized micro-batch — one cheap job
     val nRows = renamed.count()
-    val (ranked, handle) = Sampling.stratumRunningSumAndHandle(
-      renamed.withColumn("__dk0", dk(col("domain"))), Seq("__dk0"),
-      Seq(h, col("doc_id")), lit(1L), "__rn",
-      smallInput = Some(smallBatch(renamed, nRows)))
-    try {
-      val admitted = ranked
+    Pins.scoped {
+      val admitted = Sampling.stratumRunningSum(
+          renamed.withColumn("__dk0", dk(col("domain"))), Seq("__dk0"),
+          Seq(h, col("doc_id")), lit(1L), "__rn",
+          smallInput = Some(smallBatch(renamed, nRows)))
         .join(broadcast(prior), col("__dk0") === col("__dk"), "left")
         .filter(coalesce(col("__prior"), lit(0L)) + col("__rn") <= cap)
         .select(col("doc_id"), col("domain"), lit(1L).as("n"))
       AdditiveStats.append(admitted, store(dir), batchId)
-    } finally handle.foreach(_.unpersist(blocking = false))
+    }
     // serve the admitted set from the just-written fragment ONLY (the
     // batch_id filter partition-prunes the store read to this batch's
     // partition — without it every consumed return would scan the WHOLE
     // accumulated store, O(store) per batch over the stream's life) —
-    // safe to re-evaluate after the two-pass handle is released (the
+    // safe to re-evaluate after the scope released the two-pass pin (the
     // in-flight plan is not; the folded-replay path above keeps its
     // whole-store recovery shape, where the fragment no longer exists)
     renamed.join(
@@ -247,18 +246,17 @@ object QuotaView {
     val h = hash.getOrElse(xxhash64(col("doc_id")))
     // size-gated within-batch running sum (see the scale-shape note)
     val nRows = renamed.count()
-    val (cum, handle) = Sampling.stratumRunningSumAndHandle(
-      renamed.withColumn("__dk0", dk(col("domain"))), Seq("__dk0"),
-      Seq(h, col("doc_id")), col("n_tok"), "__cum",
-      smallInput = Some(smallBatch(renamed, nRows)))
-    val scored = decorate(cum
-        .join(broadcast(prior), col("__dk0") === col("__dk"), "left")
-        .withColumn("__tot", coalesce(col("__prior"), lit(0L)) + col("__cum")))
+    Pins.scoped {
+      val cum = Sampling.stratumRunningSum(
+        renamed.withColumn("__dk0", dk(col("domain"))), Seq("__dk0"),
+        Seq(h, col("doc_id")), col("n_tok"), "__cum",
+        smallInput = Some(smallBatch(renamed, nRows)))
       // kept and sentinel both derive from this frame and the write
       // action consumes them together — pin it so the batch running sum
       // and the store's prior scan run ONCE per micro-batch, not twice
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      val scored = Pins.pin(decorate(cum
+        .join(broadcast(prior), col("__dk0") === col("__dk"), "left")
+        .withColumn("__tot", coalesce(col("__prior"), lit(0L)) + col("__cum"))))
       val kept = scored.filter(keep)
         .select(col("doc_id"), col("domain"), col("n_tok").as("n"))
       val sentinel = scored.filter(!keep)
@@ -266,14 +264,11 @@ object QuotaView {
         .agg(sum(col("n_tok")).as("n"))
         .select(lit(null).cast("long").as("doc_id"), col("domain"), col("n"))
       AdditiveStats.append(kept.unionByName(sentinel), store(dir), batchId)
-    } finally {
-      scored.unpersist(blocking = false)
-      handle.foreach(_.unpersist(blocking = false))
     }
     // serve the admitted set from the just-written fragment ONLY (the
     // batch_id filter partition-prunes the store read — see the count
     // form's note; sentinel rows' null doc_ids never semi-match) — safe
-    // to re-evaluate after the persists are released (the in-flight
+    // to re-evaluate after the scope released its pins (the in-flight
     // plan is not)
     renamed.join(
       AdditiveStats.read(spark, store(dir))

@@ -148,70 +148,69 @@ object Release {
     // fp_add, fp_xor) — O(#shards) on the driver (the explicit contract)
     var assignRows: Array[(String, Int, Long, Long, String, Long)] = null
 
-    // 1. deterministic split (exact per-stratum fraction floors),
-    //    bracketed — the shard assignment and the write run inside
-    Sampling.withDeterministicSplit(corpus, spec.strataCols, spec.keyCols,
-        spec.fractions, spec.seed, spec.splitCol) { split =>
-      // 2. shard by EXCLUSIVE prefix token sum in the split's own
-      //    deterministic order (same seeded draw)
+    // 1. deterministic split (exact per-stratum fraction floors), then
+    // 2. shard by EXCLUSIVE prefix token sum in the split's own
+    //    deterministic order (same seeded draw) — both two-pass pins are
+    //    scoped: the shard assignment and the write run inside
+    Pins.scoped {
+      val split = Sampling.deterministicSplit(corpus, spec.strataCols,
+        spec.keyCols, spec.fractions, spec.seed, spec.splitCol)
       val draw = md5(concat_ws("|",
         lit(spec.seed.toString) +:
           spec.keyCols.map(c => col(c).cast("string")): _*).cast("binary"))
-      val (cum, shardHandle) = Sampling.stratumRunningSumAndHandle(
+      val cum = Sampling.stratumRunningSum(
         split, Seq(spec.splitCol), draw +: spec.keyCols.map(col),
         col(spec.tokensCol).cast("long"), "__cum")
-      try {
-        // INTEGER division on longs (`div`), not double `/`: floor of a
-        // double quotient loses exactness once a split's cumulative token
-        // count exceeds 2^53 — at 100 TB that misassigns shard boundaries
-        // (round-19 ADVICE). The prefix sum is non-negative (tokens are
-        // non-negative by contract), so div == floor.
-        val tokEsc = spec.tokensCol.replace("`", "``")
-        val sharded = cum.withColumn("shard",
-          expr(s"CAST((__cum - CAST(`$tokEsc` AS BIGINT)) " +
-            s"div ${spec.shardTokens} AS INT)"))
-          .drop("__cum")
-        // 2b. per-shard counts + order-invariant member fingerprints,
-        //     map-side combined (the DECIMAL sum cannot overflow ANSI
-        //     long arithmetic, and its string form is scale-stable)
-        assignRows = sharded.withColumn("__rh", rowHash)
-          .groupBy(col(spec.splitCol).cast("string").as("split"),
-            col("shard"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col(spec.tokensCol).cast("long")).as("n_tokens"),
-            sum(col("__rh").cast("decimal(38,0)")).cast("string")
-              .as("fp_add"),
-            expr("bit_xor(__rh)").as("fp_xor"))
-          .collect()
-          .map(r => (r.getString(0), r.getInt(1), r.getLong(2),
-            r.getLong(3), r.getString(4), r.getLong(5)))
-        // 3. the corpus-sized action: the shard-partitioned write —
-        //    full on a first/incompatible release, dirty-only on a
-        //    fingerprint-matched re-release (clean shards hard-link)
-        prior match {
-          case Some((priorCorpus, priorFps)) if assignRows.nonEmpty =>
-            val clean = assignRows.filter { case (s, n, d, t, fa, fx) =>
-              priorFps.get((s, n)).contains((d, t, fa, fx))
-            }
-            val cleanKeys = clean.map(t => (t._1, t._2)).toSet
-            val dirty = assignRows.collect {
-              case t if !cleanKeys((t._1, t._2)) => (t._1, t._2)
-            }
-            if (dirty.nonEmpty) {
-              import spark.implicits._
-              sharded.join(
-                  broadcast(dirty.toSeq.toDF(spec.splitCol, "shard")),
-                  Seq(spec.splitCol, "shard"), "left_semi")
-                .write.mode("overwrite")
-                .partitionBy(spec.splitCol, "shard").parquet(corpusPath)
-            }
-            linkShards(spark, priorCorpus, corpusPath, spec.splitCol,
-              clean.map(t => (t._1, t._2)).toSeq)
-          case _ =>
-            sharded.write.mode("overwrite")
+      // INTEGER division on longs (`div`), not double `/`: floor of a
+      // double quotient loses exactness once a split's cumulative token
+      // count exceeds 2^53 — at 100 TB that misassigns shard boundaries
+      // (round-19 ADVICE). The prefix sum is non-negative (tokens are
+      // non-negative by contract), so div == floor.
+      val tokEsc = spec.tokensCol.replace("`", "``")
+      val sharded = cum.withColumn("shard",
+        expr(s"CAST((__cum - CAST(`$tokEsc` AS BIGINT)) " +
+          s"div ${spec.shardTokens} AS INT)"))
+        .drop("__cum")
+      // 2b. per-shard counts + order-invariant member fingerprints,
+      //     map-side combined (the DECIMAL sum cannot overflow ANSI
+      //     long arithmetic, and its string form is scale-stable)
+      assignRows = sharded.withColumn("__rh", rowHash)
+        .groupBy(col(spec.splitCol).cast("string").as("split"),
+          col("shard"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col(spec.tokensCol).cast("long")).as("n_tokens"),
+          sum(col("__rh").cast("decimal(38,0)")).cast("string")
+            .as("fp_add"),
+          expr("bit_xor(__rh)").as("fp_xor"))
+        .collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getLong(2),
+          r.getLong(3), r.getString(4), r.getLong(5)))
+      // 3. the corpus-sized action: the shard-partitioned write —
+      //    full on a first/incompatible release, dirty-only on a
+      //    fingerprint-matched re-release (clean shards hard-link)
+      prior match {
+        case Some((priorCorpus, priorFps)) if assignRows.nonEmpty =>
+          val clean = assignRows.filter { case (s, n, d, t, fa, fx) =>
+            priorFps.get((s, n)).contains((d, t, fa, fx))
+          }
+          val cleanKeys = clean.map(t => (t._1, t._2)).toSet
+          val dirty = assignRows.collect {
+            case t if !cleanKeys((t._1, t._2)) => (t._1, t._2)
+          }
+          if (dirty.nonEmpty) {
+            import spark.implicits._
+            sharded.join(
+                broadcast(dirty.toSeq.toDF(spec.splitCol, "shard")),
+                Seq(spec.splitCol, "shard"), "left_semi")
+              .write.mode("overwrite")
               .partitionBy(spec.splitCol, "shard").parquet(corpusPath)
-        }
-      } finally shardHandle.foreach(_.unpersist())
+          }
+          linkShards(spark, priorCorpus, corpusPath, spec.splitCol,
+            clean.map(t => (t._1, t._2)).toSeq)
+        case _ =>
+          sharded.write.mode("overwrite")
+            .partitionBy(spec.splitCol, "shard").parquet(corpusPath)
+      }
     }
 
     // 4. manifest: fingerprints from the assignment, counts RE-COUNTED

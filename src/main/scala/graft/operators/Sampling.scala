@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * are one window shuffle partitioned by stratum; the cap/budget/split
   * forms ([[cappedPerStratum]], [[weightCappedPerStratum]],
   * [[budgetCappedPerStratum]], [[deterministicSplit]]) ride
-  * [[stratumRunningSumAndHandle]]'s SIZE-GATED per-stratum running sum:
+  * [[stratumRunningSum]]'s SIZE-GATED per-stratum running sum:
   * small inputs take the one-window form, large inputs the two-pass
   * distributed running sum, which costs one extra data shuffle and in
   * exchange never sorts a stratum in one task — the form that survives a
@@ -27,15 +27,9 @@ import org.apache.spark.sql.functions._
   * q42's hash split), which is shuffle-free; this operator is for exact-k
   * strata.
   *
-  * CACHE LIFETIME: on the two-pass path the internal persist pins the
-  * range boundaries across the two internal consumers and stays pinned to
-  * the returned frame; the one-window path persists nothing. Prefer the
-  * `withX` bracket forms (leak-free: a per-call private handle released
-  * after `use` runs its actions — the [[SurrogateKey.withScalable]] /
-  * [[Packing.withStreamPositions]] discipline, safe under concurrency); a
-  * long-running curation service must never need the global
-  * `spark.catalog.clearCache()` hammer. The plain forms keep the old
-  * contract (clearCache after the final action) for one-shot jobs.
+  * CACHE LIFETIME: the two-pass path (and [[epochShuffle]]) pins its
+  * range-sorted relation through [[Pins]]; the one-window path pins
+  * nothing. Release with `Pins.scoped` around the final action.
   */
 object Sampling {
 
@@ -123,29 +117,11 @@ object Sampling {
     * check: q46 plans a Partial+Final WindowGroupLimit, t10 planned
     * NONE) — a stratum-partitioned window over a LARGE input would sort a
     * mega-stratum in one task with no bound, so at scale the rank rides
-    * the two-pass. Prefer [[withTemperatureResample]] (leak-free); the
-    * plain form inherits the class cache contract.
+    * the two-pass.
     */
   def temperatureResample(df: DataFrame, strataCols: Seq[String],
                           keyCols: Seq[String], scale: Int = 8,
-                          hash: Option[Column] = None): DataFrame =
-    temperatureAndHandle(df, strataCols, keyCols, scale, hash)._1
-
-  /** Resource-bracket form of [[temperatureResample]]: `use` must execute
-    * its actions before returning (the internal cached relation, when the
-    * two-pass path was taken, is released afterwards). Safe under
-    * concurrency: each bracket owns its own handle.
-    */
-  def withTemperatureResample[T](df: DataFrame, strataCols: Seq[String],
-                                 keyCols: Seq[String], scale: Int = 8,
-                                 hash: Option[Column] = None)
-                                (use: DataFrame => T): T =
-    bracket(temperatureAndHandle(df, strataCols, keyCols, scale, hash))(use)
-
-  private def temperatureAndHandle(df: DataFrame, strataCols: Seq[String],
-                                   keyCols: Seq[String], scale: Int,
-                                   hash: Option[Column])
-      : (DataFrame, Option[DataFrame]) = {
+                          hash: Option[Column] = None): DataFrame = {
     require(scale > 0, s"scale must be positive, got $scale")
     val quotas = df.groupBy(strataCols.map(col): _*)
       .agg(count(lit(1)).as("__cnt"))
@@ -153,20 +129,10 @@ object Sampling {
         least(col("__cnt"),
           lit(scale.toLong) * floor(sqrt(col("__cnt")))).as("__quota"): _*)
     val h = hash.getOrElse(xxhash64(keyCols.map(col): _*))
-    val (cum, handle) = stratumRunningSumAndHandle(df, strataCols,
-      h +: keyCols.map(col), lit(1L), "__rn")
-    val out = cum
+    stratumRunningSum(df, strataCols, h +: keyCols.map(col), lit(1L), "__rn")
       .join(broadcast(quotas), strataCols)
       .filter(col("__rn") <= col("__quota"))
       .drop("__rn", "__quota")
-    (out, handle)
-  }
-
-  private def bracket[T](outAndHandle: (DataFrame, Option[DataFrame]))
-                        (use: DataFrame => T): T = {
-    val (out, handle) = outAndHandle
-    try use(out)
-    finally handle.foreach(_.unpersist(blocking = false))
   }
 
   /** SIZE-GATED distributed per-stratum running sum — `sum(w) OVER
@@ -201,28 +167,26 @@ object Sampling {
     * than a wider tiebreaker: appending hidden columns to the order
     * would silently diverge from every written oracle.
     *
-    * Returns the internal pinned relation (two-pass path only) for the
-    * caller to release after the final action — [[QuotaView]] gates per
-    * micro-batch through the same core with an explicit row count.
+    * [[QuotaView]] gates per micro-batch through the same core with an
+    * explicit row count.
     */
-  private[operators] def stratumRunningSumAndHandle(
+  private[operators] def stratumRunningSum(
       df: DataFrame, strataCols: Seq[String], orderCols: Seq[Column],
       weight: Column, cumCol: String,
-      smallInput: Option[Boolean] = None): (DataFrame, Option[DataFrame]) = {
+      smallInput: Option[Boolean] = None): DataFrame = {
     val small = smallInput.getOrElse(useWindowForm(df))
     if (small && strataCols.nonEmpty) {
       val w = Window.partitionBy(strataCols.map(col): _*)
         .orderBy(orderCols: _*)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      (df.withColumn(cumCol, sum(weight).over(w)), None)
+      df.withColumn(cumCol, sum(weight).over(w))
     } else {
       // empty strata never take the window form: it would be a GLOBAL
       // (single-partition) window — the exact shape the two-pass exists
       // to remove, and the PlanAuditSpec inventory would rightly flag it
-      val (out, handle) = TwoPass.prefixAndHandle(df, strataCols, orderCols,
-        weight, sum, (off, local) => coalesce(off, lit(0L)) + local,
+      TwoPass.prefix(df, strataCols, orderCols, weight, sum,
+        (off, local) => coalesce(off, lit(0L)) + local,
         inclusive = true, outCol = cumCol)
-      (out, Some(handle))
     }
   }
 
@@ -238,35 +202,17 @@ object Sampling {
     *
     * The kept set equals `row_number() OVER (PARTITION BY stratum ORDER
     * BY hash, keys) <= cap` (the one-window oracle form), computed via
-    * the size-gated [[stratumRunningSumAndHandle]] so a mega-stratum at
-    * scale never serializes through one task (SamplingSpec pins the
-    * equivalence law on randomized skewed corpora). Prefer
-    * [[withCappedPerStratum]] (leak-free bracket); the plain form keeps
-    * the clearCache contract on the two-pass path.
+    * the size-gated [[stratumRunningSum]] so a mega-stratum at scale never
+    * serializes through one task (SamplingSpec pins the equivalence law
+    * on randomized skewed corpora).
     */
   def cappedPerStratum(df: DataFrame, strataCols: Seq[String],
                        keyCols: Seq[String], cap: Int,
-                       hash: Option[Column] = None): DataFrame =
-    cappedAndHandle(df, strataCols, keyCols, cap, hash)._1
-
-  /** Resource-bracket form of [[cappedPerStratum]]: `use` must execute
-    * its actions before returning. Safe under concurrency.
-    */
-  def withCappedPerStratum[T](df: DataFrame, strataCols: Seq[String],
-                              keyCols: Seq[String], cap: Int,
-                              hash: Option[Column] = None)
-                             (use: DataFrame => T): T =
-    bracket(cappedAndHandle(df, strataCols, keyCols, cap, hash))(use)
-
-  private def cappedAndHandle(df: DataFrame, strataCols: Seq[String],
-                              keyCols: Seq[String], cap: Int,
-                              hash: Option[Column])
-      : (DataFrame, Option[DataFrame]) = {
+                       hash: Option[Column] = None): DataFrame = {
     require(cap > 0, s"cap must be positive, got $cap")
     val h = hash.getOrElse(xxhash64(keyCols.map(col): _*))
-    val (cum, handle) = stratumRunningSumAndHandle(df, strataCols,
-      h +: keyCols.map(col), lit(1L), "__cum")
-    (cum.filter(col("__cum") <= cap).drop("__cum"), handle)
+    stratumRunningSum(df, strataCols, h +: keyCols.map(col), lit(1L), "__cum")
+      .filter(col("__cum") <= cap).drop("__cum")
   }
 
   /** WEIGHT-BUDGETED per-stratum cap — the TOKEN-budget form of
@@ -282,36 +228,17 @@ object Sampling {
     *
     * Weights must be non-negative (a negative weight would un-exceed an
     * exceeded budget and break the prefix property). Computed via the
-    * size-gated [[stratumRunningSumAndHandle]] so the dominant stratum of
-    * a skewed mixture never serializes through one task at scale. Prefer
-    * [[withWeightCappedPerStratum]] (leak-free bracket).
+    * size-gated [[stratumRunningSum]] so the dominant stratum of a skewed
+    * mixture never serializes through one task at scale.
     */
   def weightCappedPerStratum(df: DataFrame, strataCols: Seq[String],
                              keyCols: Seq[String], weightCol: String,
                              budget: Long,
-                             hash: Option[Column] = None): DataFrame =
-    weightCappedAndHandle(df, strataCols, keyCols, weightCol, budget, hash)._1
-
-  /** Resource-bracket form of [[weightCappedPerStratum]]: `use` must
-    * execute its actions before returning. Safe under concurrency.
-    */
-  def withWeightCappedPerStratum[T](df: DataFrame, strataCols: Seq[String],
-                                    keyCols: Seq[String], weightCol: String,
-                                    budget: Long,
-                                    hash: Option[Column] = None)
-                                   (use: DataFrame => T): T =
-    bracket(weightCappedAndHandle(df, strataCols, keyCols, weightCol,
-      budget, hash))(use)
-
-  private def weightCappedAndHandle(df: DataFrame, strataCols: Seq[String],
-                                    keyCols: Seq[String], weightCol: String,
-                                    budget: Long, hash: Option[Column])
-      : (DataFrame, Option[DataFrame]) = {
+                             hash: Option[Column] = None): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
     val h = hash.getOrElse(xxhash64(keyCols.map(col): _*))
-    val (cum, handle) = stratumRunningSumAndHandle(df, strataCols,
-      h +: keyCols.map(col), col(weightCol), "__cum")
-    (cum.filter(col("__cum") <= budget).drop("__cum"), handle)
+    stratumRunningSum(df, strataCols, h +: keyCols.map(col), col(weightCol),
+      "__cum").filter(col("__cum") <= budget).drop("__cum")
   }
 
   /** PER-STRATUM budget RELATION form of [[weightCappedPerStratum]] —
@@ -321,40 +248,20 @@ object Sampling {
     * one constant. Strata ABSENT from the relation are kept whole
     * (unlimited) — a mixture spec names the strata it constrains. Same
     * greedy-prefix/running-sum semantics on the size-gated
-    * [[stratumRunningSumAndHandle]] (no stratum ever serializes at
-    * scale); the budget relation broadcasts (mixture specs are
-    * driver-small by nature). Prefer [[withBudgetCappedPerStratum]]
-    * (leak-free bracket).
+    * [[stratumRunningSum]] (no stratum ever serializes at scale); the
+    * budget relation broadcasts (mixture specs are driver-small by
+    * nature).
     */
   def budgetCappedPerStratum(df: DataFrame, strataCols: Seq[String],
                              keyCols: Seq[String], weightCol: String,
                              budgets: DataFrame,
-                             hash: Option[Column] = None): DataFrame =
-    budgetCappedAndHandle(df, strataCols, keyCols, weightCol, budgets, hash)._1
-
-  /** Resource-bracket form of [[budgetCappedPerStratum]]: `use` must
-    * execute its actions before returning. Safe under concurrency.
-    */
-  def withBudgetCappedPerStratum[T](df: DataFrame, strataCols: Seq[String],
-                                    keyCols: Seq[String], weightCol: String,
-                                    budgets: DataFrame,
-                                    hash: Option[Column] = None)
-                                   (use: DataFrame => T): T =
-    bracket(budgetCappedAndHandle(df, strataCols, keyCols, weightCol,
-      budgets, hash))(use)
-
-  private def budgetCappedAndHandle(df: DataFrame, strataCols: Seq[String],
-                                    keyCols: Seq[String], weightCol: String,
-                                    budgets: DataFrame, hash: Option[Column])
-      : (DataFrame, Option[DataFrame]) = {
+                             hash: Option[Column] = None): DataFrame = {
     val h = hash.getOrElse(xxhash64(keyCols.map(col): _*))
-    val (cum, handle) = stratumRunningSumAndHandle(df, strataCols,
-      h +: keyCols.map(col), col(weightCol), "__cum")
-    val out = cum
+    stratumRunningSum(df, strataCols, h +: keyCols.map(col), col(weightCol),
+        "__cum")
       .join(broadcast(budgets), strataCols, "left")
       .filter(col("budget").isNull || col("__cum") <= col("budget"))
       .drop("__cum", "budget")
-    (out, handle)
   }
 
   /** DETERMINISTIC TRAIN/VAL/TEST SPLIT — the one curation primitive
@@ -387,12 +294,11 @@ object Sampling {
     * single-task).
     *
     * Scale shape: one driver-small per-stratum count broadcast + the
-    * size-gated per-stratum rank ([[stratumRunningSumAndHandle]]). The
+    * size-gated per-stratum rank ([[stratumRunningSum]]). The
     * leakage companion: near-dup pairs STRADDLING the split (train text
     * memorizing an eval near-duplicate) — compose with
     * [[graft.ext.NearDup]]'s pair relations over the split assignment
-    * (d20 pins the audit shape). Prefer [[withDeterministicSplit]]
-    * (leak-free bracket) in services.
+    * (d20 pins the audit shape).
     *
     * NO streaming twin, deliberately: exact floor boundaries depend on
     * the per-stratum count n, which GROWS under ingest — the
@@ -406,25 +312,7 @@ object Sampling {
   def deterministicSplit(df: DataFrame, strataCols: Seq[String],
                          keyCols: Seq[String],
                          fractions: Seq[(String, Double)], seed: Long,
-                         splitCol: String = "split"): DataFrame =
-    splitAndHandle(df, strataCols, keyCols, fractions, seed, splitCol)._1
-
-  /** Resource-bracket form of [[deterministicSplit]]: `use` must execute
-    * its actions before returning. Safe under concurrency.
-    */
-  def withDeterministicSplit[T](df: DataFrame, strataCols: Seq[String],
-                                keyCols: Seq[String],
-                                fractions: Seq[(String, Double)], seed: Long,
-                                splitCol: String = "split")
-                               (use: DataFrame => T): T =
-    bracket(splitAndHandle(df, strataCols, keyCols, fractions, seed,
-      splitCol))(use)
-
-  private def splitAndHandle(df: DataFrame, strataCols: Seq[String],
-                             keyCols: Seq[String],
-                             fractions: Seq[(String, Double)], seed: Long,
-                             splitCol: String)
-      : (DataFrame, Option[DataFrame]) = {
+                         splitCol: String = "split"): DataFrame = {
     require(fractions.nonEmpty, "at least one split required")
     require(fractions.forall(_._2 > 0), s"fractions must be positive: $fractions")
     require(fractions.map(_._1).distinct.size == fractions.size,
@@ -435,7 +323,7 @@ object Sampling {
       .agg(count(lit(1)).as("__n"))
       .select(strataCols.map(c => col(c).as(s"__s_$c")) :+ col("__n"): _*)
     val h = seededDraw(seed, keyCols)
-    val (ranked, handle) = stratumRunningSumAndHandle(df, strataCols,
+    val ranked = stratumRunningSum(df, strataCols,
       h +: keyCols.map(col), lit(1L), "__rn",
       // a global rank (no strata) must never take the single-window form
       smallInput = if (strataCols.isEmpty) Some(false) else None)
@@ -455,7 +343,7 @@ object Sampling {
         lit(fractions.last._1)) { case (((name, _), c), rest) =>
       when(col("__rn") <= floor(lit(c) * col("__n")), name).otherwise(rest)
     }
-    (withN.withColumn(splitCol, assign).drop("__rn", "__n"), handle)
+    withN.withColumn(splitCol, assign).drop("__rn", "__n")
   }
 
   /** GROUP-AWARE deterministic split — the leakage-PROOF form of
@@ -476,45 +364,24 @@ object Sampling {
     *
     * Scale shape: one distinct over (strata, group) + the size-gated
     * group rank + one (shuffled) equi-join of the data against the
-    * group assignment. Prefer [[withGroupSplit]] (leak-free bracket).
+    * group assignment.
     */
   def groupSplit(df: DataFrame, strataCols: Seq[String],
                  groupCols: Seq[String],
                  fractions: Seq[(String, Double)], seed: Long,
-                 splitCol: String = "split"): DataFrame =
-    groupSplitAndHandle(df, strataCols, groupCols, fractions, seed,
-      splitCol)._1
-
-  /** Resource-bracket form of [[groupSplit]]: `use` must execute its
-    * actions before returning. Safe under concurrency.
-    */
-  def withGroupSplit[T](df: DataFrame, strataCols: Seq[String],
-                        groupCols: Seq[String],
-                        fractions: Seq[(String, Double)], seed: Long,
-                        splitCol: String = "split")
-                       (use: DataFrame => T): T =
-    bracket(groupSplitAndHandle(df, strataCols, groupCols, fractions, seed,
-      splitCol))(use)
-
-  private def groupSplitAndHandle(df: DataFrame, strataCols: Seq[String],
-                                  groupCols: Seq[String],
-                                  fractions: Seq[(String, Double)],
-                                  seed: Long, splitCol: String)
-      : (DataFrame, Option[DataFrame]) = {
+                 splitCol: String = "split"): DataFrame = {
     require(groupCols.nonEmpty, "groupSplit needs at least one group column")
     val keys = strataCols ++ groupCols
     val groups = df.select(keys.map(col): _*).distinct()
-    val (assigned, handle) = splitAndHandle(groups, strataCols, groupCols,
+    val assigned = deterministicSplit(groups, strataCols, groupCols,
       fractions, seed, splitCol)
     // NULL-SAFE join back: a NULL group key is a real group (distinct
     // keeps it and it gets a split); a plain equi-join would silently
     // DROP its rows from the output
     val renamed = assigned.select(
       keys.map(c => col(c).as(s"__g_$c")) :+ col(splitCol): _*)
-    val out = df.join(renamed,
-        keys.map(c => col(c) <=> col(s"__g_$c")).reduce(_ && _))
+    df.join(renamed, keys.map(c => col(c) <=> col(s"__g_$c")).reduce(_ && _))
       .drop(keys.map(c => s"__g_$c"): _*)
-    (out, handle)
   }
 
   private def seededDraw(seed: Long, keyCols: Seq[String]): Column =
@@ -539,26 +406,11 @@ object Sampling {
     * bit-for-bit (hex strings agree cross-engine); keys must uniquely
     * identify rows (ties broken by the key itself, so determinism holds
     * regardless).
-    *
-    * CACHE LIFETIME: inherits [[SurrogateKey.scalable]]'s contract — the
-    * internal persist pins the range boundaries; prefer the
-    * [[withEpochShuffle]] bracket, or `spark.catalog.clearCache()` after
-    * the final action.
     */
   def epochShuffle(df: DataFrame, keyCols: Seq[String], seed: Long,
                    posCol: String = "shuffle_pos"): DataFrame =
     SurrogateKey.scalable(df, seededDraw(seed, keyCols) +: keyCols.map(col),
       posCol)
-
-  /** Resource-bracket form of [[epochShuffle]] (delegates to
-    * [[SurrogateKey.withScalable]]): `use` must execute its actions
-    * before returning. Safe under concurrency.
-    */
-  def withEpochShuffle[T](df: DataFrame, keyCols: Seq[String], seed: Long,
-                          posCol: String = "shuffle_pos")
-                         (use: DataFrame => T): T =
-    SurrogateKey.withScalable(df,
-      seededDraw(seed, keyCols) +: keyCols.map(col), posCol)(use)
 
   /** WEIGHTED sampling without replacement (Efraimidis & Spirakis 2006,
     * "Weighted random sampling with a reservoir"): every row draws a

@@ -40,27 +40,13 @@ object SurrogateKey {
     * included), determinism requires the sort order to be total — pass a
     * tie-breaking key.
     *
-    * CACHE LIFETIME: the internal persist (required for correctness — see
-    * the comment below) is tied to the RETURNED frame and cannot be
-    * released inside this method; unpersisting before the caller's last
-    * action would let the two consumers re-sample range boundaries and
-    * silently duplicate/gap ids. The caller must release it when done —
-    * either via the [[withScalable]] bracket (preferred), or
-    * `spark.catalog.clearCache()` after the frame's final action. Bench
-    * clears the cache between queries for exactly this reason.
+    * CACHE LIFETIME: the range-sorted relation is pinned through [[Pins]]
+    * (required for correctness — see the comment below); release it with
+    * `Pins.scoped` around the frame's final action.
     */
-  def scalable(df: DataFrame, order: Seq[Column], idCol: String = "Id"): DataFrame =
-    scalableAndHandle(df, order, idCol)._1
-
-  /** Core two-pass assignment, returning BOTH the keyed frame and the
-    * pinned internal relation. The handle is returned explicitly (not via a
-    * shared slot) so concurrent callers can never unpersist each other's
-    * pinned relation mid-use.
-    */
-  private def scalableAndHandle(df: DataFrame, order: Seq[Column],
-                                idCol: String): (DataFrame, DataFrame) = {
+  def scalable(df: DataFrame, order: Seq[Column], idCol: String = "Id"): DataFrame = {
     val local = lit((1L << 33) - 1)
-    // persist() pins the (partition-dependent, nondeterministic) __mid
+    // the pin holds the (partition-dependent, nondeterministic) __mid
     // values: the frame is consumed TWICE below — by the counts aggregate
     // and by the join — and correctness of the offsets requires both
     // evaluations to see identical range-partition boundaries. Without a
@@ -68,37 +54,17 @@ object SurrogateKey {
     // sort exchanges need not be reused — two independent range samplings
     // could disagree on boundaries and silently duplicate/gap ids. The
     // in-memory relation keeps the plan in SQL operators (no RDD
-    // round-trip); MEMORY_AND_DISK spills rather than evicting, so a
-    // cached partition is never recomputed mid-query.
-    // TwoPass.tagged: a per-call literal keeps concurrent brackets over
-    // structurally identical inputs from sharing (and cross-unpersisting)
-    // one cache entry — see the TwoPass.callTag scaladoc
-    val withMid = TwoPass.tagged(df.orderBy(order: _*)
+    // round-trip).
+    val withMid = Pins.pin(df.orderBy(order: _*)
       .withColumn("__mid", monotonically_increasing_id()))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val counts = withMid
       .groupBy(shiftright(col("__mid"), 33).as("__pid"))
       .agg(count(lit(1)).as("__n"))
     val offsets = counts.select(col("__pid"),
       (sum(col("__n")).over(Window.orderBy("__pid")) - col("__n")).as("__offset"))
-    val out = withMid
+    withMid
       .join(broadcast(offsets), shiftright(col("__mid"), 33) === col("__pid"))
       .withColumn(idCol, col("__offset") + col("__mid").bitwiseAND(local) + 1L)
-      .drop("__mid", "__pid", "__offset", "__call_tag")
-    (out, withMid)
-  }
-
-  /** Resource-bracket form of [[scalable]]: runs `use` on the keyed frame,
-    * then unpersists the internal cached relation — the leak-free way to
-    * consume a scalable surrogate key when the result is acted on inside
-    * one scope. `use` must EXECUTE its actions before returning (a lazy
-    * frame escaping the bracket re-inherits the unpersist hazard). Safe
-    * under concurrency: each bracket owns its own handle.
-    */
-  def withScalable[T](df: DataFrame, order: Seq[Column], idCol: String = "Id")
-                     (use: DataFrame => T): T = {
-    val (out, handle) = scalableAndHandle(df, order, idCol)
-    try use(out)
-    finally handle.unpersist(blocking = false)
+      .drop("__mid", "__pid", "__offset", Pins.TagCol)
   }
 }

@@ -4,13 +4,17 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** THE generalized distributed prefix-aggregate skeleton — one
-  * implementation of the two-pass trick that [[SurrogateKey.scalable]]
-  * (global ids) and [[Packing.streamPositions]] (global running sums)
-  * introduced, parameterized by stratum columns, aggregate, merge, and
-  * frame so the per-stratum cumsum ([[Sampling]]) and the global prefix
-  * max ([[PrefixAgg]]) are thin wrappers instead of third and fourth
-  * copies of the machinery (round-15 review consolidation):
+/** THE distributed prefix-aggregate skeleton — the one implementation
+  * of the two-pass trick, parameterized by stratum columns, aggregate,
+  * merge and frame. Its callers:
+  *   - [[Sampling.stratumRunningSum]], the size-gated per-stratum
+  *     running sum under the quota, budget and split operators, and
+  *     through them [[QuotaView]] and [[Release]];
+  *   - [[Packing.streamPositions]] (global exclusive running sums, under
+  *     [[Packing.chunk]] and [[Packing.sequences]]);
+  *   - [[PrefixAgg.maxExclusive]] (global exclusive prefix max).
+  * [[SurrogateKey.scalable]] keeps its own core: its `__mid`-bit local
+  * index needs no pid-keyed window (one shuffle fewer).
   *
   *   1. range-sort by (strata, order); `monotonically_increasing_id()`
   *      pins (partition id, local row number) as column arithmetic;
@@ -35,54 +39,19 @@ import org.apache.spark.sql.functions._
   * the caller's documented contract (e.g. non-null, non-negative for
   * budget sums). Determinism requires (strata, order) to be total.
   *
-  * CACHE LIFETIME: the internal persist pins the partition-dependent
-  * `__mid` values across the two consumers (per-partition aggregate +
-  * join) — the same correctness argument as [[SurrogateKey.scalable]]:
-  * without a shared materialization the two subtrees could re-sample
-  * range boundaries and disagree. [[prefixAndHandle]] returns the pinned
-  * relation explicitly (the [[SurrogateKey.scalableAndHandle]] /
-  * [[Packing.positionsAndHandle]] discipline: a per-call private handle,
-  * never a shared slot, so concurrent callers cannot unpersist each
-  * other's relation mid-use); callers either bracket it (the `withX`
-  * forms in [[Sampling]]) or fall back to
-  * `spark.catalog.clearCache()` after the final action.
+  * CACHE LIFETIME: the range-sorted relation is pinned through [[Pins]];
+  * release it with `Pins.scoped` around the frame's final action.
   */
 private[operators] object TwoPass {
 
-  /** Per-call tag defeating the CacheManager's plan dedup: two
-    * concurrent brackets over STRUCTURALLY IDENTICAL inputs would
-    * otherwise share one InMemoryRelation (persist on an
-    * already-cached canonical plan is a no-op), and the first
-    * bracket's unpersist would unpin the other mid-use — re-opening
-    * the exact boundary-re-sampling hazard the persist exists to
-    * prevent. A distinct literal column makes each call's canonicalized
-    * plan unique, so every bracket owns a private cache entry; the
-    * column is constant (no semantic effect) and dropped from the
-    * output. Shared by every two-pass core ([[TwoPass]],
-    * [[SurrogateKey.scalable]], [[Packing.streamPositions]]).
-    */
-  private val callTag = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private[operators] def tagged(df: DataFrame): DataFrame =
-    df.withColumn("__call_tag", lit(callTag.incrementAndGet()))
-
-  /** [[prefix]] returning BOTH the aggregated frame and the pinned
-    * internal relation for the caller to release after the frame's final
-    * action. NOTE: once the handle is unpersisted, re-evaluating the
-    * returned frame is UNSAFE (the two internal consumers could re-sample
-    * range boundaries and disagree) — brackets must execute their actions
-    * before releasing.
-    */
-  def prefixAndHandle(df: DataFrame, strataCols: Seq[String],
-                      orderCols: Seq[Column], value: Column,
-                      agg: Column => Column,
-                      combine: (Column, Column) => Column, inclusive: Boolean,
-                      outCol: String): (DataFrame, DataFrame) = {
-    val sorted = tagged(df
+  def prefix(df: DataFrame, strataCols: Seq[String], orderCols: Seq[Column],
+             value: Column, agg: Column => Column,
+             combine: (Column, Column) => Column, inclusive: Boolean,
+             outCol: String): DataFrame = {
+    val sorted = Pins.pin(df
       .orderBy(strataCols.map(col) ++ orderCols: _*)
       .withColumn("__v", value)
       .withColumn("__mid", monotonically_increasing_id()))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pid = shiftright(col("__mid"), 33)
     val parts = sorted
       .groupBy(pid.as("__pid") +: strataCols.map(c => col(c).as(s"__s_$c")): _*)
@@ -99,17 +68,9 @@ private[operators] object TwoPass {
     val wLocal = Window.partitionBy(pid +: strataCols.map(col): _*)
       .orderBy(col("__mid"))
       .rowsBetween(Window.unboundedPreceding, if (inclusive) 0L else -1L)
-    val out = sorted.join(broadcast(offsets), joinCond, "left")
+    sorted.join(broadcast(offsets), joinCond, "left")
       .withColumn(outCol, combine(col("__off"), agg(col("__v")).over(wLocal)))
-      .drop(Seq("__v", "__mid", "__pid", "__off", "__call_tag") ++
+      .drop(Seq("__v", "__mid", "__pid", "__off", Pins.TagCol) ++
         strataCols.map(c => s"__s_$c"): _*)
-    (out, sorted)
   }
-
-  def prefix(df: DataFrame, strataCols: Seq[String], orderCols: Seq[Column],
-             value: Column, agg: Column => Column,
-             combine: (Column, Column) => Column, inclusive: Boolean,
-             outCol: String): DataFrame =
-    prefixAndHandle(df, strataCols, orderCols, value, agg, combine,
-      inclusive, outCol)._1
 }

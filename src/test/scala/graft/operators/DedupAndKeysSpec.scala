@@ -56,19 +56,20 @@ class DedupAndKeysSpec extends SparkSpec {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val df = (1 to 500).map(i => (i % 7, i)).toDF("a", "b")
     var during = Set.empty[Int]
-    val ids = SurrogateKey.withScalable(df, Seq(col("a"), col("b"))) { keyed =>
+    val ids = Pins.scoped {
+      val keyed = SurrogateKey.scalable(df, Seq(col("a"), col("b")))
       val r = keyed.select("Id").as[Long].collect().sorted
       // snapshot while the internal relation is still persisted
       during = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
       r
     }
     assert(ids.head == 1L && ids.last == 500L)
-    assert(during.nonEmpty, "the bracket never persisted its internal relation")
+    assert(during.nonEmpty, "the scope never persisted its internal relation")
     // unpersist(blocking = false) is async; poll briefly
     val deadline = System.nanoTime() + 5e9.toLong
     def ours = spark.sparkContext.getPersistentRDDs.keySet.toSet.intersect(during)
     while (ours.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-    assert(ours.isEmpty, "withScalable must unpersist its internal relation")
+    assert(ours.isEmpty, "the scope must unpersist its internal relation")
   }
 
   test("Dedup.keepBest keeps the preferred cluster member; singletons survive") {

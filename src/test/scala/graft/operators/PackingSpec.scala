@@ -14,8 +14,9 @@ class PackingSpec extends SparkSpec {
   test("streamPositions equals the global-window cumsum under adversarial partitioning") {
     val rows = (1L to 200L).map(i => (i, (i * 7) % 23)) // varied weights incl. 0
     val df = rows.toDF("id", "w").repartition(7) // scrambled input placement
-    val got = Packing.withStreamPositions(df, Seq(col("id")), "w") {
-      _.select("id", "stream_start").as[(Long, Long)].collect().toMap
+    val got = Pins.scoped {
+      Packing.streamPositions(df, Seq(col("id")), "w")
+        .select("id", "stream_start").as[(Long, Long)].collect().toMap
     }
     val want = rows.toDF("id", "w")
       .withColumn("stream_start",
@@ -49,22 +50,23 @@ class PackingSpec extends SparkSpec {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val df = (1 to 300).map(i => (i.toLong, (i % 5).toLong)).toDF("id", "w")
     var during = Set.empty[Int]
-    Packing.withStreamPositions(df, Seq(col("id")), "w") { out =>
-      out.collect()
+    Pins.scoped {
+      Packing.streamPositions(df, Seq(col("id")), "w").collect()
       during = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     }
-    assert(during.nonEmpty, "the bracket never persisted its internal relation")
+    assert(during.nonEmpty, "the scope never persisted its internal relation")
     val deadline = System.nanoTime() + 5e9.toLong
     def ours = spark.sparkContext.getPersistentRDDs.keySet.toSet.intersect(during)
     while (ours.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-    assert(ours.isEmpty, "withStreamPositions must unpersist its internal relation")
+    assert(ours.isEmpty, "the scope must unpersist its internal relation")
   }
 
   test("sequences: per-sequence slices are contiguous and sum to seqLen (except the tail)") {
     val rows = (1L to 400L).map(i => (i, (i * 13) % 37)) // varied weights incl. 0
     val df = rows.toDF("id", "w").repartition(5)
-    val slices = Packing.withSequences(df, Seq(col("id")), "w", seqLen = 64L) {
-      _.select("seq_id", "offset_in_seq", "len_in_seq", "offset_in_doc", "id", "w")
+    val slices = Pins.scoped {
+      Packing.sequences(df, Seq(col("id")), "w", seqLen = 64L)
+        .select("seq_id", "offset_in_seq", "len_in_seq", "offset_in_doc", "id", "w")
         .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
     }
     val total = rows.map(_._2).sum
@@ -113,8 +115,9 @@ class PackingSpec extends SparkSpec {
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     def run(df: org.apache.spark.sql.DataFrame): Future[Map[Long, Long]] = Future {
-      Packing.withStreamPositions(df, Seq(col("id")), "w") { out =>
-        gate.await() // both brackets hold their persists simultaneously
+      Pins.scoped {
+        val out = Packing.streamPositions(df, Seq(col("id")), "w")
+        gate.await() // both scopes hold their persists simultaneously
         val m = out.select("id", "stream_start").as[(Long, Long)].collect().toMap
         gate.await() // neither unpersists until both have collected
         m
@@ -127,7 +130,7 @@ class PackingSpec extends SparkSpec {
     // unpersist the other call's pinned relation mid-collect)
     assert(want1(500L) == (1 to 499).map(i => (i % 7).toLong).sum)
     assert(want2(500L) == (1 to 499).map(i => (i % 11).toLong).sum)
-    // and both handles were released — no leak survives the brackets
+    // and both pins were released — no leak survives the scopes
     val deadline = System.nanoTime() + 5e9.toLong
     def leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)

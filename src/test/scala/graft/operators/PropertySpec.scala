@@ -165,9 +165,9 @@ class PropertySpec extends SparkSpec {
       // renormalize drift so the operator's sum-to-1 require passes
       val fixed = fr.init :+ (fr.last._1 -> (1.0 - fr.init.map(_._2).sum))
       val seed = rnd.nextLong()
-      val got = Sampling.withDeterministicSplit(d, Seq("g"), Seq("id"),
-          fixed, seed) {
-        _.select("id", "split").as[(Long, String)].collect().toMap
+      val got = Pins.scoped {
+        Sampling.deterministicSplit(d, Seq("g"), Seq("id"), fixed, seed)
+          .select("id", "split").as[(Long, String)].collect().toMap
       }
       // driver replay
       val cum = fixed.map(_._2).scanLeft(0.0)(_ + _).tail

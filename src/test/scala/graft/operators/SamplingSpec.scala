@@ -305,18 +305,18 @@ class SamplingSpec extends SparkSpec {
       val d = (1 to 400).map(i => (i.toLong, s"g${i % 5}", (i % 7 + 1).toLong))
         .toDF("id", "g", "w")
       var during = Set.empty[Int]
-      val n = Sampling.withWeightCappedPerStratum(d, Seq("g"), Seq("id"),
-          "w", 50L) { out =>
-        val c = out.count()
+      val n = Pins.scoped {
+        val c = Sampling.weightCappedPerStratum(d, Seq("g"), Seq("id"),
+          "w", 50L).count()
         during = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
         c
       }
       assert(n > 0)
-      assert(during.nonEmpty, "the bracket never persisted its internal relation")
+      assert(during.nonEmpty, "the scope never persisted its internal relation")
       val deadline = System.nanoTime() + 5e9.toLong
       def ours = spark.sparkContext.getPersistentRDDs.keySet.toSet.intersect(during)
       while (ours.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(ours.isEmpty, "the bracket must unpersist its internal relation")
+      assert(ours.isEmpty, "the scope must unpersist its internal relation")
     }
   }
 
@@ -331,8 +331,9 @@ class SamplingSpec extends SparkSpec {
       import scala.concurrent.ExecutionContext.Implicits.global
       def run(d: org.apache.spark.sql.DataFrame, cap: Int): Future[Set[Long]] =
         Future {
-          Sampling.withCappedPerStratum(d, Seq("g"), Seq("id"), cap) { out =>
-            gate.await() // both brackets hold their persists simultaneously
+          Pins.scoped {
+            val out = Sampling.cappedPerStratum(d, Seq("g"), Seq("id"), cap)
+            gate.await() // both scopes hold their persists simultaneously
             val s = out.select("id").as[Long].collect().toSet
             gate.await() // neither unpersists until both have collected
             s
@@ -359,8 +360,9 @@ class SamplingSpec extends SparkSpec {
       .select(col("id"), (col("id") % 7).cast("string").as("g"))
     val fr = Seq(("train", 0.8), ("val", 0.1), ("test", 0.1))
     def assignments(df: org.apache.spark.sql.DataFrame, seed: Long) =
-      Sampling.withDeterministicSplit(df, Seq("g"), Seq("id"), fr, seed) {
-        _.select("id", "split").as[(Long, String)].collect().toMap
+      Pins.scoped {
+        Sampling.deterministicSplit(df, Seq("g"), Seq("id"), fr, seed)
+          .select("id", "split").as[(Long, String)].collect().toMap
       }
     val got = Sampling.deterministicSplit(d, Seq("g"), Seq("id"), fr, 42L)
     val counts = got.groupBy("g", "split").count()
@@ -405,7 +407,8 @@ class SamplingSpec extends SparkSpec {
     // be null-safe or its rows silently vanish
     val gd = Seq.tabulate(100)(i =>
       (i.toLong, if (i % 10 == 0) null else s"grp${i % 7}")).toDF("id", "grp")
-    val gGot = Sampling.withGroupSplit(gd, Nil, Seq("grp"), fr, 7L) { out =>
+    val gGot = Pins.scoped {
+      val out = Sampling.groupSplit(gd, Nil, Seq("grp"), fr, 7L)
       (out.count(), out.filter(col("grp").isNull)
         .select("split").distinct().as[String].collect().toSeq)
     }
@@ -415,9 +418,9 @@ class SamplingSpec extends SparkSpec {
 
   test("concurrent brackets over IDENTICAL inputs own private cache entries") {
     // the CacheManager dedups structurally-equal cached plans, so two
-    // identical concurrent brackets would share one InMemoryRelation and
+    // identical concurrent scopes would share one InMemoryRelation and
     // the first unpersist would unpin the other mid-use — the per-call
-    // tag gives each bracket a unique canonical plan
+    // tag gives each pin a unique canonical plan
     withConf(Sampling.TwoPassMinBytesKey, "0") {
       val d = (1 to 600).map(i => (i.toLong, s"g${i % 5}", (i % 7 + 1).toLong))
         .toDF("id", "g", "w")
@@ -427,7 +430,8 @@ class SamplingSpec extends SparkSpec {
       import scala.concurrent.ExecutionContext.Implicits.global
       def run(): Future[Set[Long]] = Future {
         // SAME frame, SAME arguments on both threads
-        Sampling.withWeightCappedPerStratum(d, Seq("g"), Seq("id"), "w", 60L) { out =>
+        Pins.scoped {
+          val out = Sampling.weightCappedPerStratum(d, Seq("g"), Seq("id"), "w", 60L)
           gate.await()
           val s = out.select("id").as[Long].collect().toSet
           gate.await() // A finishing first must not unpin B's relation
@@ -439,15 +443,16 @@ class SamplingSpec extends SparkSpec {
       val (a, b) = (run(), run())
       val ra = Await.result(a, 120.seconds)
       val rb = Await.result(b, 120.seconds)
-      assert(ra == rb && ra.nonEmpty, "identical brackets disagreed")
+      assert(ra == rb && ra.nonEmpty, "identical scopes disagreed")
     }
   }
 
   test("deterministicSplit: unstratified (global) split is exact and rides the two-pass") {
     val d = spark.range(1000).toDF("id")
     val fr = Seq(("train", 0.8), ("val", 0.1), ("test", 0.1))
-    val counts = Sampling.withDeterministicSplit(d, Nil, Seq("id"), fr, 7L) {
-      _.groupBy("split").count().as[(String, Long)].collect().toMap
+    val counts = Pins.scoped {
+      Sampling.deterministicSplit(d, Nil, Seq("id"), fr, 7L)
+        .groupBy("split").count().as[(String, Long)].collect().toMap
     }
     assert(counts == Map("train" -> 800L, "val" -> 100L, "test" -> 100L),
       counts.toString)
@@ -458,9 +463,10 @@ class SamplingSpec extends SparkSpec {
     spark.catalog.clearCache()
     assert(p.contains("Exchange rangepartitioning"), p)
     // degenerate: a single split takes everything
-    val one = Sampling.withDeterministicSplit(d, Nil, Seq("id"),
-      Seq(("all", 1.0)), 7L)(_.groupBy("split").count()
-        .as[(String, Long)].collect().toMap)
+    val one = Pins.scoped {
+      Sampling.deterministicSplit(d, Nil, Seq("id"), Seq(("all", 1.0)), 7L)
+        .groupBy("split").count().as[(String, Long)].collect().toMap
+    }
     assert(one == Map("all" -> 1000L))
   }
 
@@ -470,8 +476,9 @@ class SamplingSpec extends SparkSpec {
     val rows = for (g <- 0 until 100; i <- 0 to g % 13) yield (g * 1000L + i, g.toLong)
     val d = rows.toDF("id", "grp").repartition(7, col("id"))
     val fr = Seq(("train", 0.8), ("val", 0.1), ("test", 0.1))
-    val got = Sampling.withGroupSplit(d, Nil, Seq("grp"), fr, seed = 7L) {
-      _.select("id", "grp", "split").as[(Long, Long, String)].collect()
+    val got = Pins.scoped {
+      Sampling.groupSplit(d, Nil, Seq("grp"), fr, seed = 7L)
+        .select("id", "grp", "split").as[(Long, Long, String)].collect()
     }
     assert(got.length == rows.length, "groupSplit dropped or duplicated rows")
     // atomicity: one split per group
@@ -482,9 +489,10 @@ class SamplingSpec extends SparkSpec {
     val counts = groupSplit.values.groupBy(identity).map { case (s, xs) => s -> xs.size }
     assert(counts == Map("train" -> 80, "val" -> 10, "test" -> 10), counts.toString)
     // partitioning-invariant (pure function of seed + group keys)
-    val again = Sampling.withGroupSplit(d.repartition(13, col("grp")), Nil,
-        Seq("grp"), fr, seed = 7L) {
-      _.select("id", "split").as[(Long, String)].collect().toMap
+    val again = Pins.scoped {
+      Sampling.groupSplit(d.repartition(13, col("grp")), Nil, Seq("grp"), fr,
+          seed = 7L)
+        .select("id", "split").as[(Long, String)].collect().toMap
     }
     assert(got.map(r => r._1 -> r._3).toMap == again,
       "assignment moved with the partitioning")

@@ -702,4 +702,45 @@ class PlanAuditSpec extends SparkSpec {
     assert(out.columns.toSeq ==
       Seq("doc_id", "url", "domain", "canon_url", "text", "n_words"))
   }
+
+  test("two-pass queries under Pins.scoped leave no pinned relation behind") {
+    import graft.operators.{Pins, Sampling}
+    // queries whose only internal pins are the two-pass ones (d21 is out:
+    // its NearDup array cache is not a two-pass pin)
+    val names = Seq("t10_mixture_resample", "t12_sequence_packing",
+      "t13_packed_sequences", "t14_epoch_shuffle", "t43_token_quota",
+      "t44_lang_token_budgets", "t45_train_val_test", "q70_domain_quota",
+      "s05_watermark_late")
+    val queries = graft.SparkEntry.queries
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sharedState.cacheManager
+    val cachedData = cacheManager.getClass.getDeclaredField("cachedData")
+    cachedData.setAccessible(true)
+    def entries: Set[AnyRef] = cachedData.get(cacheManager)
+      .asInstanceOf[Seq[AnyRef]].toSet
+    def rdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val prevGate = spark.conf.getOption(Sampling.TwoPassMinBytesKey)
+    spark.conf.set(Sampling.TwoPassMinBytesKey, "0") // force the two-pass
+    val (entriesBefore, rddsBefore) = (entries, rdds)
+    try {
+      val pinned = Pins.scoped {
+        names.foreach(n =>
+          queries(n)(spark, dir).write.format("noop").mode("overwrite").save())
+        entries -- entriesBefore
+      }
+      assert(pinned.size >= names.size,
+        s"expected a two-pass pin per query, saw ${pinned.size}")
+      val deadline = System.nanoTime() + 5e9.toLong
+      while ((rdds -- rddsBefore).nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert((entries -- entriesBefore).isEmpty,
+        s"CacheManager entries left: ${entries -- entriesBefore}")
+      assert((rdds -- rddsBefore).isEmpty,
+        s"persistent RDDs left: ${rdds -- rddsBefore}")
+    } finally prevGate match {
+      case Some(v) => spark.conf.set(Sampling.TwoPassMinBytesKey, v)
+      case None => spark.conf.unset(Sampling.TwoPassMinBytesKey)
+    }
+  }
 }
